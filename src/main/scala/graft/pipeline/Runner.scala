@@ -11,19 +11,16 @@ import org.apache.spark.sql.functions._
   * explicit here rather than an import side effect.
   *
   * Re-runs are idempotent by construction: deterministic uuid5 keys, keep-
-  * last dedupe, and union-accumulate dimensions that read their own
-  * previous output (the reference's `self.users_df` instance state, made
-  * durable). Every entity write goes through the one-generation rotation
-  * sink and reports before/after row counts (the A1/A3 audits). */
+  * last dedupe, and union-accumulate dimensions (the reference's
+  * `self.users_df` instance state, made durable). The owner and user
+  * dimensions read the current generation of their own table through
+  * [[Generation.read]], so run n holds the union of runs 1..n. Every
+  * entity is committed as the next generation of its table (staged, then
+  * rotated and renamed; a crash mid-swap leaves the backup for the next
+  * run to read) and reports before/after row counts (the A1/A3 audits). */
 object Runner {
 
   final case class Audit(entity: String, rowsIn: Long, rowsOut: Long)
-
-  private def readIfExists(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(dir)) else None
-  }
 
   private def rawOrNone(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
@@ -75,9 +72,9 @@ object Runner {
     val reposClean = sink("repos", Transform.cleanRepos(reposRawObs),
       reposIn.get("n").asInstanceOf[Long])
 
-    val owners = sink("owners",
+    sink("owners",
       Transform.cleanOwners(reposClean,
-        readIfExists(spark, s"$outDir/owners_clean_backup")),
+        Generation.read(spark, s"$outDir/owners_clean")),
       rowsOut("repos"))
 
     rawOrNone(spark, s"$rawDir/branches_raw.json", Schemas.branchesRaw)
@@ -96,17 +93,18 @@ object Runner {
           iIn.get("n").asInstanceOf[Long])
         sink("users",
           Transform.cleanUsers(issuesClean,
-            readIfExists(spark, s"$outDir/users_clean_backup")),
+            Generation.read(spark, s"$outDir/users_clean")),
           rowsOut("issues"))
       }
 
-    val _ = owners
     audits
   }
 
-  /** CLI: run over the reference's committed raw fixtures. */
+  /** CLI: `Runner <rawDir> [outDir]`; `rawDir` holds repos_raw.json and
+    * optionally branches_raw.json and issues_raw.json. */
   def main(args: Array[String]): Unit = {
-    val rawDir = if (args.nonEmpty) args(0) else "/root/reference/data/raw_data"
+    require(args.nonEmpty, "usage: Runner <rawDir> [outDir]")
+    val rawDir = args(0)
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline_out"
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")

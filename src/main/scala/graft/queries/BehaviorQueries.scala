@@ -41,17 +41,24 @@ object BehaviorQueries {
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     eventPairCache.computeIfAbsent((s, d), { case (s2, d2) =>
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      graft.ops.Staging.pin(
-        T(s2, d2, "events")
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"))
-          .withColumn("src_state", lag("event_type", 1).over(w))
-          .filter(col("src_state").isNotNull)
-          .groupBy(col("src_state"), col("event_type").as("dst_state"))
-          .agg(count(lit(1)).as("cnt")))
+      graft.ops.Staging.pin(eventPairs(s2, d2))
     })
   private[queries] def clearEventPairCache(): Unit = eventPairCache.clear()
+
+  /** The unpinned build [[sharedEventPairs]] pins: one (ts, event_id)-
+    * ordered lag window over ONE user_id exchange, then the (src, dst)
+    * count rollup. */
+  private[graft] def eventPairs(
+      s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    T(s, d, "events")
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("src_state", lag("event_type", 1).over(w))
+      .filter(col("src_state").isNotNull)
+      .groupBy(col("src_state"), col("event_type").as("dst_state"))
+      .agg(count(lit(1)).as("cnt"))
+  }
 
   val all: Seq[Q] = Seq(
 
@@ -278,8 +285,9 @@ object BehaviorQueries {
     // First-order Markov transition matrix over each user's ordered
     // event stream: lag(event_type) on the (ts, event_id)-ordered user
     // partition, then count per (prev, next) with the per-prev row
-    // probability as a single count/count division. One user_id window
-    // exchange + one 25-row aggregate.
+    // probability as a single count/count division. The one user_id
+    // window exchange runs in the pinned [[sharedEventPairs]] build; the
+    // gate itself only normalizes the 25-row matrix.
     Q(
       "event_transitions",
       (s, d) =>

@@ -32,8 +32,13 @@ class BehaviorPlanSpec extends AnyFunSuite {
   }
 
   test("transitions: one ordered user window feeds the 25-row rollup") {
+    // the window runs once, in the pair build the three Markov gates share
+    val build = graft.queries.BehaviorQueries.eventPairs(spark, sf)
+      .queryExecution.executedPlan.toString
+    assert(countOf(build, "Exchange hashpartitioning\\(user_id") == 1, build)
+    // the gate reads the pinned pairs and never re-shuffles by user
     val p = plan("event_transitions")
-    assert(countOf(p, "Exchange hashpartitioning\\(user_id") == 1, p)
+    assert(countOf(p, "Exchange hashpartitioning\\(user_id") == 0, p)
   }
 
   test("twap: lead window and rollup share ONE user_id exchange") {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,23 +13,36 @@ class SinksExtractSpec extends AnyFunSuite {
 
   test("rotation sink keeps exactly one backup generation (S5/S7)") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_rot").toString + "/repos_clean"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val formats = Seq[(String, (DataFrame, String) => Unit, String => DataFrame)](
+      ("parquet", Sinks.writeParquetWithRotation, spark.read.parquet(_)),
+      ("orc", Sinks.writeOrcWithRotation, spark.read.orc(_)),
+      ("csv", Sinks.writeCsvWithRotation, spark.read.option("header", "true").csv(_)),
+      ("json", Sinks.writeJsonWithRotation, spark.read.json(_)))
+    for ((format, write, read) <- formats) {
+      val base = Files.createTempDirectory("graft_rot").toString + "/repos_clean"
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def gen(dir: String) = read(dir).select("v").head().getString(0)
+      def generations = (gen(base), gen(base + "_backup"))
+      def frame(v: String) = Seq((1L, v)).toDF("id", "v")
 
-    Sinks.writeParquetWithRotation(Seq((1L, "gen1")).toDF("id", "v"), base)
-    assert(spark.read.parquet(base).select("v").head().getString(0) == "gen1")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(base + "_backup")))
+      write(frame("gen1"), base)
+      assert(gen(base) == "gen1", format)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(base + "_backup")), format)
 
-    Sinks.writeParquetWithRotation(Seq((1L, "gen2")).toDF("id", "v"), base)
-    assert(spark.read.parquet(base).select("v").head().getString(0) == "gen2")
-    assert(spark.read.parquet(base + "_backup")
-      .select("v").head().getString(0) == "gen1")
+      write(frame("gen2"), base)
+      assert(generations == ("gen2", "gen1"), format)
 
-    Sinks.writeParquetWithRotation(Seq((1L, "gen3")).toDF("id", "v"), base)
-    // one generation deep: gen1 is gone, backup is gen2
-    assert(spark.read.parquet(base + "_backup")
-      .select("v").head().getString(0) == "gen2")
+      // a frame that fails while its job runs: both generations survive
+      val failing = spark.range(1).select(col("id"),
+        raise_error(lit("write fails mid-job")).cast("string").as("v"))
+      intercept[Exception](write(failing, base))
+      assert(generations == ("gen2", "gen1"), format)
+
+      write(frame("gen4"), base)
+      // one generation deep: gen1 is gone, backup is gen2
+      assert(generations == ("gen4", "gen2"), format)
+    }
   }
 
   test("auth probe fail-stop semantics (S4)") {
