@@ -75,12 +75,16 @@ object GraphOps {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+    // the initial node count rides the first pin as an observe() metric,
+    // like every round's `changed`: 0 rows → already converged
+    val obs0 = Observation()
     var labels = sym
       .select(col("u").as("id"))
       .distinct()
       .select(col("id"), col("id").as("component"))
+      .observe(obs0, count(lit(1)).as("n"))
       .stagePin()
-    var changed = labels.count() // 0 rows → already converged
+    var changed = obs0.get("n").asInstanceOf[Long]
     val idType = labels.schema("component").dataType
 
     var round = 0
@@ -563,11 +567,15 @@ object GraphOps {
     * so the result is hash-identical to a full recompute over base ∪
     * delta edges (gated, plus a random-graph unit test).
     *
-    * Plan shape: two broadcast-friendly lookups delta-side, one CC loop
-    * over the contracted (delta-sized) graph, one relabel join over the
-    * base labels keyed on `component`. At warehouse scale the relabel
-    * is the patch a merge-on-read table applies; nothing rescans base
-    * EDGES, which is what makes the pass delta-proportional.
+    * Plan shape: the delta edge list is projected to (`ea`, `eb`) and
+    * pinned ONCE — the contraction and the new-node set both read that
+    * pin, so the caller's delta plan (typically a whole Jaccard pair
+    * pipeline) is evaluated exactly once per call. Then two
+    * broadcast-friendly lookups delta-side, one CC loop over the
+    * contracted (delta-sized) graph, one relabel join over the base
+    * labels keyed on `component`. At warehouse scale the relabel is the
+    * patch a merge-on-read table applies; nothing rescans base EDGES,
+    * which is what makes the pass delta-proportional.
     *
     * @param baseLabels (`id`, `component`) with component = min member
     *        id, e.g. a prior [[connectedComponents]] output.
@@ -578,8 +586,11 @@ object GraphOps {
       aCol: String, bCol: String): DataFrame = {
     val lbl = baseLabels.select(col("id"), col("component"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val contracted = deltaEdges
+    // pinned once: `contracted` and `newNodes` both read it (Plan shape)
+    val delta = deltaEdges
       .select(col(aCol).as("ea"), col(bCol).as("eb"))
+      .stagePin()
+    val contracted = delta
       .join(lbl.select(col("id").as("ea"), col("component").as("ra")),
         Seq("ea"), "left_outer")
       .join(lbl.select(col("id").as("eb"), col("component").as("rb")),
@@ -595,8 +606,8 @@ object GraphOps {
       .join(merged.select(col("id").as("component"),
         col("component").as("newc")), Seq("component"), "left_outer")
       .select(col("id"), coalesce(col("newc"), col("component")).as("component"))
-    val newNodes = deltaEdges.select(col(aCol).as("id"))
-      .union(deltaEdges.select(col(bCol).as("id")))
+    val newNodes = delta.select(col("ea").as("id"))
+      .union(delta.select(col("eb").as("id")))
       .distinct()
       .join(lbl.select("id"), Seq("id"), "left_anti")
       .join(merged.withColumnRenamed("component", "newc"),

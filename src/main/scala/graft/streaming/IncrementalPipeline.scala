@@ -177,13 +177,15 @@ object IncrementalPipeline {
     *     corpus ([[streamingDedupeAgainstBase]]) — which is ALSO what
     *     makes checkpoint-recovery replays converge: a re-delivered
     *     batch dedupes to empty and every downstream step no-ops;
-    *  2. builds the delta near-dup edges: within-batch pairs
+    *  2. plans the delta near-dup edges: within-batch pairs
     *     ([[graft.ops.DedupOps.ngramJaccardPairs]]) plus
     *     batch-vs-corpus pairs
-    *     ([[graft.ops.DedupOps.ngramJaccardPairsBetween]]);
+    *     ([[graft.ops.DedupOps.ngramJaccardPairsBetween]]), left
+    *     unpinned here;
     *  3. merges them into the persisted labels
-    *     ([[graft.ops.GraphOps.incrementalComponents]] —
-    *     delta-proportional, never rescans base edges);
+    *     ([[graft.ops.GraphOps.incrementalComponents]], which pins the
+    *     delta edge list once, so the pair pipeline runs once per
+    *     micro-batch — delta-proportional, never rescans base edges);
     *  4. applies the new dedup state (`doc_id`, `component`,
     *     `kept` = is-cluster-representative) to the Type-2 SCD dimension
     *     ([[graft.ops.IncrementalOps.scdType2Apply]]);

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -120,6 +121,19 @@ class GraphOpsSpec extends AnyFunSuite {
         .incrementalComponents(baseLabels, delta.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
       assert(got == runCC(all), s"trial $trial (base=${base.size}, delta=${delta.size})")
+      // the delta edge list is evaluated ONCE per call: every delta row
+      // passes a nondeterministic counting UDF exactly once, however many
+      // consumers inside incrementalComponents read the delta
+      val evals = spark.sparkContext.longAccumulator(s"delta-evals-$trial")
+      val counted = udf { (a: Long) => evals.add(1L); a }.asNondeterministic()
+      val countedDelta = spark.sparkContext.parallelize(delta, 2).toDF("a", "b")
+        .select(counted(col("a")).as("a"), col("b"))
+      val gotCounted = GraphOps
+        .incrementalComponents(baseLabels, countedDelta, "a", "b")
+        .as[(Long, Long)].collect().toMap
+      assert(gotCounted == runCC(all), s"trial $trial (counted delta)")
+      assert(evals.value == delta.size.toLong,
+        s"trial $trial: ${evals.value} delta-row evaluations for ${delta.size} rows")
       baseLabels.unpersist()
     }
   }

@@ -111,5 +111,34 @@ class PipelineSemanticsSpec extends AnyFunSuite {
     assert(Validate.fkOrphans(df, "k", parent, "k2").count() == 2)
     assert(Validate.checkViolations(df, col("k") >= 0).count() == 0)
     assert(Validate.checkViolations(df, col("k") > 1).count() == 2)
+
+    // report: the per-rule counts in input order (a duplicated rule name
+    // stays its own entry), computed in ONE SQL execution for the set
+    val rules = Seq(
+      "pk" -> Validate.uniqueViolations(df, Seq("k")),
+      "fk" -> Validate.fkOrphans(df, "k", parent, "k2"),
+      "check" -> Validate.checkViolations(df, col("k") > 1),
+      "pk" -> Validate.checkViolations(df, col("k") >= 0))
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.description.contains("Validate.scala") =>
+          executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val got = try Validate.report(rules) finally {
+      Thread.sleep(2000) // listener bus is async; let execution events drain
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(got == rules.map { case (n, v) => Validate.Violation(n, v.count()) })
+    assert(got == Seq(Validate.Violation("pk", 1), Validate.Violation("fk", 2),
+      Validate.Violation("check", 2), Validate.Violation("pk", 0)))
+    assert(executions.get() == 1,
+      s"report ran ${executions.get()} SQL executions for ${rules.size} rules")
+    assert(Validate.report(Nil) == Nil)
   }
 }
